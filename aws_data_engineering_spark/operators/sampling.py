@@ -91,12 +91,14 @@ def split_assignment(
     salt: str = "split-v1",
 ) -> Column:
     """Column assigning each row a deterministic named split."""
+    thresholds = split_thresholds(fractions)
+    if not thresholds:
+        raise ValueError("split_assignment needs at least one split")
     bucket = hash_bucket(id_col, salt)
     expr: Column | None = None
-    for name, hi in split_thresholds(fractions):
+    for name, hi in thresholds:
         cond = bucket < hi
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    assert expr is not None
     return expr.alias("split")
 
 

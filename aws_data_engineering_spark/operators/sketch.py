@@ -91,6 +91,16 @@ def _compress_leaf_arrays_fn(levels: int, k: int):
     def compress_leaf_arrays(v, c):
         import numpy as np
 
+        # Guard the single-task contract (VERDICT r11 #5): the stages that
+        # call this kernel may only ever hold a DOMAIN-bounded census. A
+        # caller feeding an unclamped column would ship a corpus-sized
+        # table to one task — fail loudly here instead of OOMing the
+        # worker. An explicit raise, so it also holds under ``python -O``.
+        if len(v) > (1 << levels):
+            raise ValueError(
+                f"q-digest census has {len(v)} rows > 2^{levels} — the value "
+                "column fed to qdigest_leaves must be clamped to [0, 2^levels)"
+            )
         n = int(c.sum())
         t = n // k
         out_lvl: list = []
@@ -154,14 +164,6 @@ def qdigest_nodes_from_leaves(
         import numpy as np
         import pandas as pd
 
-        # Guard the single-task contract (VERDICT r11 #5): this stage may
-        # only ever hold a DOMAIN-bounded census. A caller feeding an
-        # unclamped column would ship a corpus-sized table to one task —
-        # fail loudly here instead of OOMing the worker.
-        assert len(pdf) <= (1 << levels), (
-            f"q-digest census has {len(pdf)} rows > 2^{levels} — the value "
-            "column fed to qdigest_leaves must be clamped to [0, 2^levels)"
-        )
         v = pdf["v"].to_numpy(np.int64)
         c = pdf["cnt"].to_numpy(np.int64)
         lvl, nid, cn, n, _t = kernel(v, c)
@@ -211,12 +213,6 @@ def qdigest_report_from_leaves(
         import numpy as np
         import pandas as pd
 
-        # Same single-task contract guard as the compress stage (VERDICT
-        # r11 #5): the census must be domain-bounded, never corpus-sized.
-        assert len(pdf) <= (1 << levels), (
-            f"q-digest census has {len(pdf)} rows > 2^{levels} — the value "
-            "column fed to qdigest_leaves must be clamped to [0, 2^levels)"
-        )
         v = pdf["v"].to_numpy(np.int64)
         c = pdf["cnt"].to_numpy(np.int64)
         lvl, nid, cn, n, t = kernel(v, c)

@@ -51,13 +51,15 @@ def cluster_within_partitions(df: DataFrame, sort_columns: list[str]) -> DataFra
 
 
 def dt_from_filename(col: Column | None = None) -> Column:
-    """P3 — ingestion date from the source file path, columnar.
+    """P3 — ingestion date from the source file name, columnar.
 
     Mirrors the v1 driver-side regex (``generic_load_script.py:120-126``):
-    first 8-digit run in the filename → 'YYYY-MM-DD'; no match → literal
-    'unknown' (that fallback is reference behavior, preserved)."""
+    first 8-digit run in the file name → 'YYYY-MM-DD'; no match → literal
+    'unknown' (that fallback is reference behavior, preserved). Only the
+    last path segment is searched, so digits in a directory name
+    (``/data/20230101_drop/orders_20240131.csv.gz``) never stamp the row."""
     src = col if col is not None else F.input_file_name()
-    raw = F.regexp_extract(src, r"(\d{8})", 1)
+    raw = F.regexp_extract(src, r"(\d{8})[^/]*$", 1)
     return F.when(
         raw == "", F.lit("unknown")
     ).otherwise(F.date_format(F.to_date(raw, "yyyyMMdd"), "yyyy-MM-dd"))

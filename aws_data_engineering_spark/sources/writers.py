@@ -20,21 +20,29 @@ Delta Lake is used when installed; otherwise ``merge_upsert`` runs a
 pure-Spark merge with the identical row semantics. Because the merge key
 includes the partition column, a source row can only ever touch its own
 ``dt`` partition — so the fallback rewrites *only the partitions present in
-the incoming batch* (dynamic partition overwrite), never the whole table.
-At 100 TB with daily ingest that is the difference between rewriting ~1/1000
-of the table and rewriting all of it.
+the incoming batch*, never the whole table. At 100 TB with daily ingest that
+is the difference between rewriting ~1/1000 of the table and rewriting all
+of it.
+
+The rewrite happens in place: ``survivors ∪ source`` is written straight
+back to the table it reads with ``partitionOverwriteMode=dynamic``. Spark
+allows that because a dynamic overwrite writes its files under
+``<table>/.spark-staging-<jobId>`` and swaps the touched partitions in at
+job commit, after every task has finished reading. A *static* overwrite of a
+path the query reads is still refused, so unpartitioned tables keep a
+staging copy next to the table.
 """
 
 from __future__ import annotations
 
-import shutil
+import posixpath
 import uuid
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_data_engineering_spark.session import HAS_DELTA
+from aws_data_engineering_spark.sources.fs import delete_path, hadoop_path
 
 VALID_STRATEGIES = ("append", "overwrite", "truncate", "upsert")
 
@@ -71,12 +79,38 @@ def write_overwrite(
     w.save(path)
 
 
-def _table_exists(spark: SparkSession, path: str, fmt: str) -> bool:
-    try:
-        spark.read.format(fmt).load(path).schema
-        return True
-    except Exception:
+def _table_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` holds a table: it exists and has at least one
+    visible entry (Spark hides ``_``/``.`` names from reads).
+
+    A filesystem probe, never a read: a table that exists but fails to read
+    must raise from the merge's own read. Treating a read error as "no
+    table" would send ``merge_upsert`` down the first-load branch, which
+    overwrites the whole table with the batch. An empty directory (left by
+    an aborted first write) counts as absent, since it holds no rows to
+    lose."""
+    fs, hpath = hadoop_path(spark, path)
+    if not fs.exists(hpath):
         return False
+    return any(
+        not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(hpath)
+    )
+
+
+def _overwrite_via_staging(
+    spark: SparkSession, df: DataFrame, path: str, fmt: str
+) -> None:
+    """Replace the unpartitioned table at ``path`` with ``df``, which reads
+    it. Spark refuses a static overwrite of a path the query reads, so
+    ``df`` is written to a sibling staging path first and copied back."""
+    parent = posixpath.dirname(path.rstrip("/")) or "."
+    staging = f"{parent}/_staging_{uuid.uuid4().hex[:8]}"
+    try:
+        df.write.mode("overwrite").format(fmt).save(staging)
+        write_overwrite(spark.read.format(fmt).load(staging), path, (), fmt)
+    finally:
+        delete_path(spark, staging)
 
 
 def merge_condition(
@@ -108,6 +142,7 @@ def merge_upsert(
     primary_key: list[str],
     partition_col: str | None = "dt",
     fmt: str = "parquet",
+    batch_keys: DataFrame | None = None,
 ) -> None:
     """W5 — MERGE upsert keyed on ``primary_key + partition_col``.
 
@@ -115,6 +150,12 @@ def merge_upsert(
     (update-all); unmatched source rows are inserted (insert-all) — i.e. the
     post-merge table is: (target rows with no source match) ∪ (source rows).
     Idempotent: re-running the same batch yields the same table.
+
+    ``batch_keys`` is a DataFrame holding the merge-key columns of every
+    source row (default: ``df`` itself). The batch's partition list and the
+    anti-join's key set are read from it, so a caller whose ``df`` sits on
+    top of an expensive plan (a global sort, an ``observe``) can pass the
+    cached scan beneath it and keep those side queries off that plan.
     """
     if not primary_key:
         # reference contract: upsert without a PK is a hard error
@@ -126,7 +167,7 @@ def merge_upsert(
             "use fmt='parquet' (the pure-Spark merge has identical row semantics)"
         )
 
-    if not _table_exists(spark, path, fmt):
+    if not _table_exists(spark, path):
         # first load creates the table (generic_load_script.py:152-154)
         write_overwrite(
             df, path, (partition_col,) if partition_col else (), fmt
@@ -147,7 +188,9 @@ def merge_upsert(
         )
         return
 
-    _merge_upsert_pure_spark(spark, df, path, primary_key, partition_col, fmt)
+    _merge_upsert_pure_spark(
+        spark, df, path, primary_key, partition_col, fmt, batch_keys
+    )
 
 
 def _merge_upsert_pure_spark(
@@ -157,6 +200,7 @@ def _merge_upsert_pure_spark(
     primary_key: list[str],
     partition_col: str | None,
     fmt: str,
+    batch_keys: DataFrame | None = None,
 ) -> None:
     """Pure-Spark MERGE: survivors(target) ∪ source, rewritten per-partition.
 
@@ -164,37 +208,31 @@ def _merge_upsert_pure_spark(
     key set — one day of keys, typically MBs even when the table is TBs —
     so Catalyst/AQE broadcasts it and the merge costs one scan of the
     affected partitions, no target-side shuffle.
+
+    A partitioned table is rewritten in place by one dynamic partition
+    overwrite (see the module docstring): each merged row is written once
+    and never read back. Spark refuses only a *static* overwrite of a path
+    it is reading from, which is what an unpartitioned table needs, so that
+    case keeps the staging copy. (With Delta installed the whole merge is a
+    single transactional MERGE.)
     """
     target = spark.read.format(fmt).load(path)
     keys = list(primary_key) + ([partition_col] if partition_col else [])
     source = df.select(*target.columns)  # align column order for the union
+    batch = (df if batch_keys is None else batch_keys).select(*keys)
 
     survivors = target
     if partition_col:
         # static partition pruning: only scan partitions the batch touches
-        batch_parts = [r[0] for r in df.select(partition_col).distinct().collect()]
+        batch_parts = [r[0] for r in batch.select(partition_col).distinct().collect()]
         survivors = survivors.filter(F.col(partition_col).isin(batch_parts))
-    survivors = survivors.join(
-        F.broadcast(df.select(*keys).distinct()), on=keys, how="left_anti"
-    )
+    survivors = survivors.join(F.broadcast(batch.distinct()), on=keys, how="left_anti")
     merged = survivors.unionByName(source)
 
-    # Spark refuses to overwrite a path it is reading from; stage the merged
-    # partitions, then dynamic-overwrite only those partitions back. (With
-    # Delta installed this whole dance is a single transactional MERGE.)
-    staging = str(Path(path).parent / f"_merge_staging_{uuid.uuid4().hex[:8]}")
-    try:
-        merged.write.mode("overwrite").format(fmt).save(staging)
-        staged = spark.read.format(fmt).load(staging)
-        write_overwrite(
-            staged,
-            path,
-            (partition_col,) if partition_col else (),
-            fmt,
-            dynamic=bool(partition_col),
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    if partition_col:
+        write_overwrite(merged, path, (partition_col,), fmt, dynamic=True)
+    else:
+        _overwrite_via_staging(spark, merged, path, fmt)
 
 
 def compact_table(
@@ -208,29 +246,19 @@ def compact_table(
     §4: per-day appends accumulate small files; no OPTIMIZE anywhere).
 
     Rewrites each partition into ``target_files_per_partition`` files via a
-    partition-keyed repartition + dynamic overwrite. At 100 TB run this
-    per-partition (recent ``dt`` values only) on a schedule; with Delta
-    installed prefer ``OPTIMIZE`` (transactional, concurrent-reader-safe).
-    The staging hop exists because Spark cannot overwrite a path it is
-    reading — Delta's txn log is the real fix for that, too."""
+    partition-keyed repartition + dynamic partition overwrite of the table
+    in place (every partition is in the read, so every partition is
+    replaced). An unpartitioned table goes through a staging copy, since
+    Spark refuses a static overwrite of a path it is reading. At 100 TB run
+    this per-partition (recent ``dt`` values only) on a schedule; with Delta
+    installed prefer ``OPTIMIZE`` (transactional, concurrent-reader-safe)."""
     df = spark.read.format(fmt).load(path)
     if partition_col:
         compacted = df.repartition(target_files_per_partition, F.col(partition_col))
+        write_overwrite(compacted, path, (partition_col,), fmt, dynamic=True)
     else:
         compacted = df.repartition(target_files_per_partition)
-
-    staging = str(Path(path).parent / f"_compact_staging_{uuid.uuid4().hex[:8]}")
-    try:
-        w = compacted.write.mode("overwrite").format(fmt)
-        if partition_col:
-            w = w.partitionBy(partition_col)
-        w.save(staging)
-        staged = spark.read.format(fmt).load(staging)
-        write_overwrite(
-            staged, path, (partition_col,) if partition_col else (), fmt
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        _overwrite_via_staging(spark, compacted, path, fmt)
 
 
 def write_bucketed_table(
@@ -264,15 +292,19 @@ def write_curated(
     primary_key: list[str] | None = None,
     partition_col: str | None = "dt",
     fmt: str = "parquet",
+    batch_keys: DataFrame | None = None,
 ) -> None:
-    """W6 — strategy dispatch ('truncate' is the v1 spelling of overwrite)."""
+    """W6 — strategy dispatch ('truncate' is the v1 spelling of overwrite).
+    ``batch_keys`` is passed to ``merge_upsert`` (upsert only)."""
     parts = (partition_col,) if partition_col else ()
     if strategy == "append":
         write_append(df, path, parts, fmt)
     elif strategy in ("overwrite", "truncate"):
         write_overwrite(df, path, parts, fmt)
     elif strategy == "upsert":
-        merge_upsert(spark, df, path, primary_key or [], partition_col, fmt)
+        merge_upsert(
+            spark, df, path, primary_key or [], partition_col, fmt, batch_keys
+        )
     else:
         raise ValueError(
             f"Unknown load strategy: {strategy!r} (expected one of {VALID_STRATEGIES})"

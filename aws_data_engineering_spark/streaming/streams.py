@@ -466,10 +466,11 @@ def stream_upsert_sink(
     def do_merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         collapsed = latest_by_key(batch_df, merge_keys, order_col, tiebreak_col)
-        # target existence via the writers' probe — a bare try/except around
-        # the read would silently treat a transient read FAILURE as "first
-        # batch" and skip the ordering guard entirely
-        if _table_exists(spark, path, fmt):
+        # target existence via the writers' filesystem probe (the same
+        # answer merge_upsert acts on) — a bare try/except around the read
+        # would silently treat a transient read FAILURE as "first batch"
+        # and skip the ordering guard entirely
+        if _table_exists(spark, path):
             target = spark.read.format(fmt).load(path)
             tgt = target.select(
                 *[F.col(k).alias(f"__t_{k}") for k in merge_keys],
