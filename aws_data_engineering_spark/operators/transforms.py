@@ -31,23 +31,34 @@ def project(df: DataFrame, select_columns: list[str] | None) -> DataFrame:
     return df
 
 
-def global_sort(df: DataFrame, sort_columns: list[str] | None) -> DataFrame:
+def global_sort(
+    df: DataFrame,
+    sort_columns: list[str] | None,
+    partition_col: str | None = None,
+) -> DataFrame:
     """P2 — config-driven full-table sort (``FInal/load_script.py:193-195``).
 
-    A global ``orderBy`` is a range-partition + sort — one full shuffle. At
-    100 TB that is only worth paying when the downstream format benefits
-    (parquet min/max pruning on the sort key); when only file-level
-    clustering is wanted, use ``cluster_within_partitions`` instead (no
-    range exchange)."""
-    if sort_columns:
-        return df.orderBy(*sort_columns)
-    return df
+    For a write partitioned by ``partition_col`` the order is
+    ``(partition_col, *sort_columns)``: exactly the ordering the partitioned
+    writer requires, so it adds no sort of its own. Sorting by
+    ``sort_columns`` alone is a trap: the writer puts a local
+    ``Sort(partition_col)`` on top, Catalyst's ``EliminateSorts`` then drops
+    the global sort beneath it as redundant and keeps only its range
+    exchange, so every file comes out unsorted while the write still pays
+    for the range sampling and the shuffle.
 
-
-def cluster_within_partitions(df: DataFrame, sort_columns: list[str]) -> DataFrame:
-    """Cheaper P2 variant: per-partition sort, no range shuffle. Gives
-    parquet row-group locality on the keys without a global ordering."""
-    return df.sortWithinPartitions(*sort_columns)
+    A single-partition input is sorted with ``sortWithinPartitions``: on
+    one partition that is the global order, with no range-sampling job and
+    no exchange. The partition count is read from ``df``'s RDD, which plans
+    the query but launches no job. Larger inputs keep the global
+    ``orderBy`` (a range-partition + sort, one full shuffle). No
+    ``sort_columns``, no sort."""
+    if not sort_columns:
+        return df
+    cols = ([partition_col] if partition_col else []) + list(sort_columns)
+    if df.rdd.getNumPartitions() == 1:
+        return df.sortWithinPartitions(*cols)
+    return df.orderBy(*cols)
 
 
 def dt_from_filename(col: Column | None = None) -> Column:

@@ -364,17 +364,6 @@ ROBOTS_RULES = (
 )
 
 
-def robots_rules_df(spark):
-    return spark.createDataFrame(
-        list(ROBOTS_RULES), "rule_host string, rule_type string, prefix string"
-    )
-
-
-def robots_rules_values_sql() -> str:
-    rows = ", ".join(f"('{h}', '{t}', '{p}')" for h, t, p in ROBOTS_RULES)
-    return f"(VALUES {rows}) AS rules(rule_host, rule_type, prefix)"
-
-
 def robots_verdict(reg_host: Column, path: Column) -> Column:
     """RFC 9309 longest-match-wins verdict, unrolled over the literal rule
     table into a SHUFFLE-FREE scan-stage expression: per rule, a matching

@@ -17,17 +17,39 @@ zone layout, with these deliberate fixes:
   ``.gz`` CSV natively on executors.
 - unknown landing strategy is a hard error (v1 silently treated anything
   ≠ 'append' as overwrite, ``generic_load_script.py:130``).
+- the two zones are written concurrently, not one after the other, and
+  the config's sort survives into the files of both (see below).
 
 Scale posture: every step is a narrow transform fused into the scan until
-the optional global sort; the writes are the only shuffles-by-necessity.
+the optional sort; the writes are the only shuffles-by-necessity.
 Gzip files are non-splittable — one task per file — so 100 TB ingest
 parallelism comes from file count, which the daily-file layout provides.
 Each load parses its inbound files once: the projected, ``dt``-stamped scan
 is persisted (``MEMORY_AND_DISK``, so a batch larger than executor memory
 spills to local disk rather than failing), every job of the load — the
-sort's sampling and map stages for both zones, the batch's partition list
-and key set for the MERGE — reads that cache, and it is released when the
-load ends. The cache holds one batch, never the table.
+sort's stages for both zones, the batch's partition list and key set for
+the MERGE — reads that cache, and it is released when the load ends. The
+cache holds one batch, never the table.
+
+Sort order: with ``sort_columns`` set, both zones are sorted by
+``("dt", *sort_columns)``, the order the ``dt``-partitioned writer needs,
+so each file is non-decreasing in ``sort_columns`` (``T.global_sort`` says
+why sorting by ``sort_columns`` alone leaves files unsorted). A
+single-partition scan (one gz file, or small files packed into one split)
+is sorted within its partition: no range-sampling job and no shuffle.
+
+Concurrent zones: a load on one gz file is a chain of one-task jobs per
+zone, which leaves the other cores idle. The landing write runs on a
+helper thread (carrying the caller's job group and tags) while the
+curated write runs on the calling thread; Spark's block lock makes the
+second reader of a cache partition wait for the first, so the CSV is still
+parsed once. Failure states: either zone can commit while the other
+fails. A committed landing append with a failed curated write was
+possible with sequential writes too; rerunning the load then appends
+the batch to landing a second time. A committed curated MERGE with a
+failed landing write is new, and a rerun repairs it: the MERGE is
+idempotent and landing gets the batch once. So the failures a rerun
+cannot repair are the same as before.
 """
 
 from __future__ import annotations
@@ -35,12 +57,14 @@ from __future__ import annotations
 import json
 import logging
 import sys
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from aws_data_engineering_spark.operators import transforms as T
 from aws_data_engineering_spark.schema import build_schema_from_dict
@@ -157,6 +181,11 @@ def run_load(
     Returns the curated-ready DataFrame (post-transform) for inspection.
     The load's scan cache is released before it returns, so evaluating
     the result parses the inbound files again.
+
+    The landing and curated writes run concurrently (module docstring).
+    Both are waited for before the cache is released; if either fails the
+    load raises — the landing error when landing failed (a curated error
+    beside it is logged), else the curated one.
     """
     schema = build_schema_from_dict(config.schema)
     _log.info(
@@ -192,36 +221,53 @@ def run_load(
             null_pk = null_pk | F.col(k).isNull()
         metrics.append(F.sum(null_pk.cast("int")).alias("null_pk_rows"))
 
-    # Parse once: without the cache every job below (the sort's sampling
-    # and map stages in both zones, the MERGE's partition list and key set)
-    # decompresses and parses the gz-CSV again. The cache sits BEFORE the
-    # sort: a cached plan keeps its own output partitioning, so caching the
-    # sorted frame would stop AQE from coalescing the sort's exchange and
-    # spread each dt over more, smaller files.
+    # Parse once: without the cache every job below (the sort's stages in
+    # both zones, the MERGE's partition list and key set) decompresses and
+    # parses the gz-CSV again. The cache sits BEFORE the sort: a cached
+    # plan keeps its own output partitioning, so caching a range-sorted
+    # frame would stop AQE from coalescing the sort's exchange and spread
+    # each dt over more, smaller files.
     scan = scan.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        df = T.global_sort(scan, config.sort_columns)
-        write_curated(
-            spark,
-            df,
-            landing_path,
-            config.landing_load_strategy,
-            partition_col="dt",
-            fmt=config.file_format,
-        )
+        df = T.global_sort(scan, config.sort_columns, partition_col="dt")
         curated = T.stamp_audit_columns(df).observe(obs, *metrics)
-        write_curated(
-            spark,
-            curated,
-            curated_path,
-            config.curated_load_strategy,
-            primary_key=config.primary_key,
-            partition_col="dt",
-            fmt=config.file_format,
-            # the MERGE's side queries read the keys from the cache, not
-            # through the sort and the observed plan
-            batch_keys=scan,
-        )
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            landing = pool.submit(
+                inheritable_thread_target(spark)(write_curated),
+                spark,
+                df,
+                landing_path,
+                config.landing_load_strategy,
+                partition_col="dt",
+                fmt=config.file_format,
+            )
+            try:
+                write_curated(
+                    spark,
+                    curated,
+                    curated_path,
+                    config.curated_load_strategy,
+                    primary_key=config.primary_key,
+                    partition_col="dt",
+                    fmt=config.file_format,
+                    # the MERGE's side queries read the keys from the cache,
+                    # not through the sort and the observed plan
+                    batch_keys=scan,
+                )
+                curated_error = None
+            except Exception as e:
+                curated_error = e
+            landing_error = landing.exception()
+        if landing_error is not None:
+            if curated_error is not None:
+                _log.error(
+                    "table=%s curated write failed too: %r",
+                    config.table_name,
+                    curated_error,
+                )
+            raise landing_error
+        if curated_error is not None:
+            raise curated_error
         audit = obs.get
     finally:
         scan.unpersist()

@@ -353,7 +353,7 @@ def st12_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     base = os.path.join(tempfile.gettempdir(), "spark_st12", uuid.uuid4().hex[:8])
     in_dir = os.path.join(base, "in")
-    # feed the corpus as doc_id-RANGE files (bucket = floor(doc_id/step),
+    # feed the corpus as doc_id-RANGE files (bucket = doc_id DIV step,
     # identical composition to the sequential filter loop this replaces,
     # now built in ONE documents scan — write_bucketed_feed): the file
     # source processes oldest-modification-time first, so batch order ==
@@ -364,9 +364,9 @@ def st12_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_id = docs.agg(F.max("doc_id")).first()[0]
     n_files = 4
     step = (int(max_id) + n_files) // n_files
-    write_bucketed_feed(
-        docs, F.floor(F.col("doc_id") / F.lit(step)), in_dir, n_files
-    )
+    # integer DIV, not floor(doc_id / step): the double division rounds
+    # once ids pass 2^53 and can put a boundary id in the wrong bucket
+    write_bucketed_feed(docs, F.expr(f"doc_id DIV {step}"), in_dir, n_files)
     stream = read_documents_stream(spark, in_dir, max_files_per_trigger=1)
     from aws_data_engineering_spark.streaming import scaled_stream_shuffle
 

@@ -205,7 +205,7 @@ def _merge_upsert_pure_spark(
     """Pure-Spark MERGE: survivors(target) ∪ source, rewritten per-partition.
 
     Join strategy note: the anti-join's build side is the incoming batch's
-    key set — one day of keys, typically MBs even when the table is TBs —
+    key columns — one day of keys, typically MBs even when the table is TBs —
     so Catalyst/AQE broadcasts it and the merge costs one scan of the
     affected partitions, no target-side shuffle.
 
@@ -226,7 +226,9 @@ def _merge_upsert_pure_spark(
         # static partition pruning: only scan partitions the batch touches
         batch_parts = [r[0] for r in batch.select(partition_col).distinct().collect()]
         survivors = survivors.filter(F.col(partition_col).isin(batch_parts))
-    survivors = survivors.join(F.broadcast(batch.distinct()), on=keys, how="left_anti")
+    # no distinct(): a left-anti join only tests whether a key exists, so
+    # duplicate keys on the build side cannot change the result
+    survivors = survivors.join(F.broadcast(batch), on=keys, how="left_anti")
     merged = survivors.unionByName(source)
 
     if partition_col:

@@ -24,9 +24,12 @@ from contextlib import contextmanager
 
 import pandas as pd
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from aws_data_engineering_spark.sources.fs import hadoop_path
 
 # Streaming sources require an explicit schema. ts is declared bigint so the
 # INT64-physical parquet column reads as its raw integer value regardless of
@@ -42,29 +45,27 @@ _TS_SANITY_MIN = "1990-01-01"
 _TS_SANITY_MAX = "2100-01-01"
 
 
-def _feed_bytes(*paths: str) -> int:
-    """Total on-disk bytes of the stream feed files under ``paths``
-    (file or directory, local FS — the bench/driver environment)."""
-    import os
-
+def _feed_bytes(spark: SparkSession, *paths: str) -> int | None:
+    """Total bytes of the stream feed files under ``paths`` (file or
+    directory), through the Hadoop FileSystem API so ``s3a://``/``hdfs://``
+    feeds are sized like local ones. ``None`` when any path cannot be sized
+    (missing, unknown scheme, no credentials)."""
     total = 0
     for p in paths:
-        if os.path.isfile(p):
-            total += os.path.getsize(p)
-        elif os.path.isdir(p):
-            for root, _dirs, files in os.walk(p):
-                for f in files:
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        pass
+        try:
+            fs, hpath = hadoop_path(spark, p)
+            total += int(fs.getContentSummary(hpath).getLength())
+        except Py4JJavaError:
+            return None
     return total
 
 
-def stream_shuffle_partitions(spark: SparkSession, feed_bytes: int) -> int:
+def stream_shuffle_partitions(spark: SparkSession, feed_bytes: int | None) -> int:
     """Scale-ADAPTIVE shuffle/state partition count for a streaming query:
     ceil(feed bytes / AQE advisory partition size), clamped to
-    [1, session spark.sql.shuffle.partitions].
+    [1, session spark.sql.shuffle.partitions]. An unknown size
+    (``feed_bytes=None``) keeps the session value: failing open costs only
+    idle partitions, while 1 partition would serialize a large feed.
 
     Micro-batch shuffles cannot be AQE-coalesced, so a streaming query
     always runs (and, for stateful operators, maintains state stores for)
@@ -86,6 +87,8 @@ def stream_shuffle_partitions(spark: SparkSession, feed_bytes: int) -> int:
         )
     )
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if feed_bytes is None:
+        return session_parts
     return max(1, min(session_parts, -(-feed_bytes // max(1, advisory))))
 
 
@@ -100,7 +103,7 @@ def scaled_stream_shuffle(spark: SparkSession, *feed_paths: str):
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     spark.conf.set(
-        key, str(stream_shuffle_partitions(spark, _feed_bytes(*feed_paths)))
+        key, str(stream_shuffle_partitions(spark, _feed_bytes(spark, *feed_paths)))
     )
     try:
         yield
@@ -1198,6 +1201,11 @@ def write_bucketed_feed(
     import os as _os
     import shutil as _shutil
 
+    if files_per_bucket > 1 and sub_expr is None:
+        raise ValueError(
+            f"files_per_bucket={files_per_bucket} needs sub_expr, the "
+            "deterministic expression that splits a bucket into its files"
+        )
     scratch = in_dir.rstrip("/") + "__build"
     staged = df.withColumn("__feed_b", bucket_expr.cast("bigint")).filter(
         F.col("__feed_b").isNotNull()
@@ -1218,11 +1226,20 @@ def write_bucketed_feed(
         < files_per_bucket
         for b in range(n_batches)
     )
+    pad = None
     if short:
         # one extra job only in the (corpus-dependent) short-bucket case
         df.limit(0).coalesce(1).write.mode("overwrite").parquet(
             _os.path.join(scratch, "__empty")
         )
+        pads = sorted(_glob.glob(_os.path.join(scratch, "__empty", "*.parquet")))
+        if not pads:
+            raise RuntimeError(
+                f"bucketed feed {in_dir}: the schema-only pad write left no "
+                f"parquet file under {scratch}/__empty, so short buckets "
+                "cannot be padded"
+            )
+        pad = pads[0]
     for b in range(n_batches):
         files = sorted(
             _glob.glob(_os.path.join(scratch, f"__feed_b={b}", "*.parquet"))
@@ -1239,14 +1256,7 @@ def write_bucketed_feed(
             if j < len(files):
                 _os.rename(files[j], dst)
             else:
-                _shutil.copy(
-                    sorted(
-                        _glob.glob(
-                            _os.path.join(scratch, "__empty", "*.parquet")
-                        )
-                    )[0],
-                    dst,
-                )
+                _shutil.copy(pad, dst)
         seen = stamp_feed_mtimes(in_dir, seen, b)
     _shutil.rmtree(scratch, ignore_errors=True)
 

@@ -549,3 +549,62 @@ def test_stream_minhash_dedup_cross_batch_state(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "out")).collect()
     }
     assert got == {0: True, 1: True, 10: False, 11: True, 20: True, 21: False}
+
+
+def test_unresolvable_feed_gets_session_partitions(spark):
+    """A feed the Hadoop FS API cannot size (unknown scheme, missing path)
+    keeps the session's partition count instead of collapsing to 1."""
+    from aws_data_engineering_spark.streaming.streams import _feed_bytes
+
+    key = "spark.sql.shuffle.partitions"
+    session_parts = spark.conf.get(key)
+    for path in ("nosuchfs://bucket/feed", "/nonexistent/feed-dir"):
+        assert _feed_bytes(spark, path) is None
+        with ST.scaled_stream_shuffle(spark, path):
+            assert spark.conf.get(key) == session_parts
+    assert spark.conf.get(key) == session_parts
+
+
+def test_feed_sizing_keeps_local_counts(spark, sf_dir, tmp_path):
+    """Sized through the FS API, a local feed gets the count its on-disk
+    bytes gave before: the sf0.1 events file (the st08 feed) and a
+    directory feed."""
+    import os
+
+    from aws_data_engineering_spark.streaming.streams import (
+        _feed_bytes,
+        stream_shuffle_partitions,
+    )
+
+    events = os.path.join(os.path.dirname(sf_dir), "sf0.1", "events.parquet")
+    if not os.path.exists(events):
+        pytest.skip("sf0.1 fixture not present")
+    size = os.path.getsize(events)
+    assert _feed_bytes(spark, events) == size
+    key = "spark.sql.shuffle.partitions"
+    with ST.scaled_stream_shuffle(spark, events):
+        assert int(spark.conf.get(key)) == stream_shuffle_partitions(spark, size)
+    feed = tmp_path / "feed"
+    (feed / "sub").mkdir(parents=True)
+    (feed / "a.parquet").write_bytes(b"x" * 100)
+    (feed / "sub" / "b.parquet").write_bytes(b"y" * 23)
+    assert _feed_bytes(spark, str(feed), events) == 123 + size
+
+
+def test_write_bucketed_feed_contract_errors(spark, tmp_path, monkeypatch):
+    """``files_per_bucket > 1`` without ``sub_expr`` is a ValueError, and a
+    pad write that leaves no file is a descriptive RuntimeError, not a
+    bare IndexError."""
+    import glob
+
+    df = spark.createDataFrame([(0, "a"), (3, "b")], "doc_id bigint, text string")
+    bucket = F.pmod(F.col("doc_id"), F.lit(3))
+    with pytest.raises(ValueError, match="sub_expr"):
+        ST.write_bucketed_feed(df, bucket, str(tmp_path / "a"), 3, files_per_bucket=2)
+
+    real_glob = glob.glob
+    monkeypatch.setattr(
+        glob, "glob", lambda p, *a, **k: [] if "__empty" in p else real_glob(p, *a, **k)
+    )
+    with pytest.raises(RuntimeError, match="pad"):
+        ST.write_bucketed_feed(df, bucket, str(tmp_path / "b"), 3)
